@@ -1,9 +1,22 @@
-"""Pure-NumPy compute kernels (no Spark imports) — unit-testable standalone.
+"""NumPy compute kernels (no Spark imports) — unit-testable standalone.
 
 These re-express the reference's per-shingle scalar loops
-(kritoke/lexis-minhash, Crystal) as batched NumPy array programs.  All uint64
+(kritoke/lexis-minhash, Crystal) as batched array programs.  All uint64
 arithmetic wraps mod 2**64 exactly like Crystal's ``&*``/``&+`` operators
 (NumPy C-semantics overflow, warnings suppressed).
+
+Each hash primitive has two implementations:
+
+- the C kernels in ``kernels_native`` (fused multiply-shift + min-reduce,
+  incremental per-document rolling hash) — the fast path, used exactly
+  when ``kernels_native.load()`` returns a library;
+- plain uint64 NumPy here — the fallback when no shared library loads
+  (``LEXIS_NATIVE_KERNEL=0`` forces it) and the in-repo reference the
+  C kernels are tested against.
+
+Both wrap mod 2^64 by C unsigned semantics, so they are bit-identical by
+construction.  The weighted update and the SimHash mix have no C kernel
+and always run on uint64 NumPy.
 
 Parity citations (semantics only — the vectorized formulation is new):
 - rolling k-shingle polynomial hash: engine/rolling.cr:44-62 (P=31, mod 2^64)
@@ -17,33 +30,58 @@ Parity citations (semantics only — the vectorized formulation is new):
 Batch layout convention: a batch of N documents is represented as
 ``(hashes_concat: uint64[total], counts: int64[N])`` — the concatenation of
 each document's shingle-hash stream plus per-document counts.  This feeds a
-single blocked ``minimum.reduceat`` min-reduce instead of N Python loops.
+single kernel call instead of N Python loops.
 """
 
 from __future__ import annotations
 
 import math
-import os
 import re
 
 import numpy as np
 
+from lexis_minhash_spark import kernels_native as KN
+
 P = np.uint64(31)
 U32_MAX_F = 4294967295.0  # Float64.new(UInt32::MAX), engine.cr:181
 _U32_FULL = np.uint32(0xFFFFFFFF)
+_U64_SHIFT32 = np.uint64(32)
 _WS_RE = re.compile(r"\s+")
 
-# Max elements in one (shingles x signature_size) block during min-reduce;
-# bounds peak scratch to ~BLOCK_ELEMS * 8 B per buffer.  The carry chain
-# re-reads the block ~8x after the GEMMs, so the block must be CACHE
-# resident: the round-4 value (1M elems = 8 MB/buffer, several buffers)
-# spilled every pass to L3/DRAM.  A round-5 sweep
-# (scripts/kernel_block_sweep.py, checksum-gated) measured 48k elems
-# (384 KB/buffer, ~1.5 MB working set = L2-resident) at +10-25% docs/s
-# over 1M, with a wide flat plateau 16k-64k (any L2-ish size works; 2M =
-# 16 MB/buffer measured 2x SLOWER).  Blocks never split a document, so
-# the effective floor is one doc (~200 shingles x S).
+# Max elements in one (shingles x signature_size) uint64 block of the NumPy
+# multiply-shift; bounds its reused scratch to BLOCK_ELEMS * 8 B (384 KB),
+# so the multiply, add and min-reduce passes over a block stay in L2.
+# Blocks never split a document, so a document larger than the budget
+# gets a block of its own.  The C kernel streams one shingle at a time and
+# needs no scratch.
 BLOCK_ELEMS = 48_000
+
+
+# ---------------------------------------------------------------------------
+# backend choice
+# ---------------------------------------------------------------------------
+
+_MULSHIFT_BACKEND: str | None = None
+_ROLLING_BACKEND: str | None = None
+
+
+def _backend() -> str:
+    """``native`` exactly when the C kernels load, else ``u64``."""
+    return "native" if KN.load() is not None else "u64"
+
+
+def _pick_mulshift_backend(s: int) -> str:
+    """Multiply-shift backend of this process (the same for every ``s``)."""
+    global _MULSHIFT_BACKEND
+    _MULSHIFT_BACKEND = _backend()
+    return _MULSHIFT_BACKEND
+
+
+def _pick_rolling_backend(k: int) -> str:
+    """Rolling-hash backend of this process (the same for every ``k``)."""
+    global _ROLLING_BACKEND
+    _ROLLING_BACKEND = _backend()
+    return _ROLLING_BACKEND
 
 
 # ---------------------------------------------------------------------------
@@ -78,100 +116,52 @@ def passes_gates(normalized: str, min_words: int, shingle_size: int) -> bool:
 # shingle hashing (engine/rolling.cr:44-62)
 # ---------------------------------------------------------------------------
 
-def shingle_hashes_bytes(data: np.ndarray, k: int) -> np.ndarray:
-    """uint64 polynomial hashes of every k-byte window of ``data`` (uint8[n]).
+def shingle_hashes_concat(
+    data: np.ndarray, lens: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-document k-byte window hashes of back-to-back byte streams.
 
-    h(w) = sum(w[j] * 31^(k-1-j)) mod 2^64 — identical values to the
-    reference's incremental rolling form (rolling.cr:44-62), computed as k
-    fused vector Horner steps.
-
-    Perf note: NumPy uint64 ``*`` throughput is HOST-DEPENDENT — earlier
-    sandbox hosts measured it ~100x slower than float64 ``*`` (no SIMD
-    64-bit multiply), which motivated the 32-bit-limb float64 Horner fast
-    path below; the current host runs u64 multiply at float64 parity,
-    where the direct u64 Horner (2 passes/step vs the limbs' 8) measured
-    40x FASTER.  ``_pick_rolling_backend`` times both once per process
-    and routes accordingly (override: LEXIS_ROLLING_BACKEND=u64|limb).
-    Both are bit-identical by construction and property-cross-checked.
+    ``data`` (uint8) holds the documents' bytes concatenated, ``lens`` their
+    lengths.  Returns ``(hashes_concat: uint64[total], counts:
+    int64[len(lens)])``: every window lying inside one document, in order;
+    a document shorter than ``k`` has none.  The one rolling-hash entry
+    point for text batches, single strings and audio envelopes.
     """
+    lens = np.asarray(lens, dtype=np.int64)
+    if _pick_rolling_backend(k) == "native":
+        return KN.rolling_hashes_multi(data, np.cumsum(lens) - lens, lens, k)
+    return _shingle_hashes_concat_u64(data, lens, k)
+
+
+def _shingle_hashes_concat_u64(
+    data: np.ndarray, lens: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """uint64 NumPy twin of ``kernels_native.rolling_hashes_multi``.
+
+    h(w) = sum(w[j] * 31^(k-1-j)) mod 2^64 — the reference's incremental
+    rolling values, computed as k in-place Horner steps (one multiply and
+    one add each) over the whole concatenation; the windows that straddle
+    a document boundary are dropped afterwards."""
+    counts = np.maximum(lens - (k - 1), 0)
     n = int(data.shape[0]) - k + 1
     if n <= 0:
-        return np.empty(0, dtype=np.uint64)
-    if _pick_rolling_backend(k) == "u64":
-        return _shingle_hashes_bytes_u64(data, k)
-    return _shingle_hashes_bytes_limb(data, k)
-
-
-def _shingle_hashes_bytes_limb(data: np.ndarray, k: int) -> np.ndarray:
-    """32-bit-limb float64 Horner (exact: every intermediate < 2^38 <<
-    2^53) — the fast path on hosts where u64 multiply is crippled."""
-    n = int(data.shape[0]) - k + 1
-    two32 = 4294967296.0  # 2^32
-    lo = np.zeros(n, dtype=np.float64)
-    hi = np.zeros(n, dtype=np.float64)
-    t = np.empty(n, dtype=np.float64)
-    carry = np.empty(n, dtype=np.float64)
-    for j in range(k):
-        # (hi*2^32 + lo) * 31 + byte, carried mod 2^64; all in-place
-        np.multiply(lo, 31.0, out=t)
-        np.add(t, data[j : j + n], out=t)      # <= 31*(2^32-1) + 255 < 2^37
-        np.multiply(t, 1.0 / two32, out=carry)
-        np.floor(carry, out=carry)
-        np.multiply(carry, two32, out=lo)
-        np.subtract(t, lo, out=lo)             # t mod 2^32
-        np.multiply(hi, 31.0, out=hi)
-        np.add(hi, carry, out=hi)
-        np.fmod(hi, two32, out=hi)             # drop bits >= 64
-    return lo.astype(np.uint64) + (hi.astype(np.uint64) << np.uint64(32))
-
-
-def _shingle_hashes_bytes_u64(data: np.ndarray, k: int) -> np.ndarray:
-    """Direct u64 Horner (in-place): 1 multiply + 1 add per step, exact
-    mod-2^64 by C unsigned wraparound.  The calibrated fast path on hosts
-    with full-rate u64 multiply; also the cross-check twin for the limb
-    path."""
-    n = int(data.shape[0]) - k + 1
-    if n <= 0:
-        return np.empty(0, dtype=np.uint64)
+        return np.empty(0, dtype=np.uint64), counts
     d = data.astype(np.uint64)
     h = np.zeros(n, dtype=np.uint64)
     for j in range(k):
         np.multiply(h, P, out=h)
         np.add(h, d[j : j + n], out=h)
-    return h
+    # window i belongs to the last document starting at or before it and
+    # is kept when it also ends inside that document
+    starts = np.cumsum(lens) - lens
+    idx = np.arange(n, dtype=np.int64)
+    owner = np.searchsorted(starts, idx, side="right") - 1
+    return h[idx - starts[owner] < counts[owner]], counts
 
 
-_ROLLING_BACKEND: str | None = None
-
-
-def _pick_rolling_backend(k: int) -> str:
-    """One-time per-process calibration of the rolling-hash Horner backend
-    (direct u64 vs 32-bit float64 limbs) — same host-dependence story as
-    _pick_mulshift_backend; measured 40x either way across host classes."""
-    global _ROLLING_BACKEND
-    env = os.environ.get("LEXIS_ROLLING_BACKEND")
-    if env in ("u64", "limb"):
-        return env
-    if _ROLLING_BACKEND is not None:
-        return _ROLLING_BACKEND
-    import time as _time
-
-    data = (np.arange(65536, dtype=np.uint32) % 251).astype(np.uint8)
-    kk = max(2, min(int(k), 16))
-    best = {}
-    for name in ("u64", "limb"):
-        t_best = None
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            if name == "u64":
-                _shingle_hashes_bytes_u64(data, kk)
-            else:
-                _shingle_hashes_bytes_limb(data, kk)
-            dt = _time.perf_counter() - t0
-            t_best = dt if t_best is None else min(t_best, dt)
-        best[name] = t_best
-    _ROLLING_BACKEND = "u64" if best["u64"] <= best["limb"] else "limb"
-    return _ROLLING_BACKEND
+def shingle_hashes_bytes(data: np.ndarray, k: int) -> np.ndarray:
+    """uint64 hashes of every k-byte window of ``data`` (uint8[n])."""
+    return shingle_hashes_concat(data, np.array([data.shape[0]]), k)[0]
 
 
 def shingle_hashes_text(text: str, k: int) -> np.ndarray:
@@ -185,223 +175,61 @@ def shingle_hash_for(shingle: str) -> int:
     """Polynomial hash of a whole key string (engine.cr:264-273):
     window size = byte length, i.e. plain poly hash of all bytes."""
     b = shingle.encode("utf-8")
-    h = shingle_hashes_bytes(np.frombuffer(b, dtype=np.uint8), len(b))
-    return int(h[0]) if h.size else 0
+    if not b:
+        return 0
+    return int(shingle_hashes_bytes(np.frombuffer(b, dtype=np.uint8), len(b))[0])
 
 
 def batch_shingle_hashes(
     texts: list[str], k: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized shingle hashing for a batch of normalized texts.
-
-    Concatenates all UTF-8 byte streams, hashes every window of the big
-    array once, then drops windows that straddle document boundaries.
-    Returns ``(hashes_concat: uint64[total], counts: int64[len(texts)])``.
-    """
-    n_docs = len(texts)
-    counts = np.zeros(n_docs, dtype=np.int64)
-    if n_docs == 0:
-        return np.empty(0, dtype=np.uint64), counts
-    chunks = []
-    lens = np.zeros(n_docs, dtype=np.int64)
-    for i, t in enumerate(texts):
-        b = t.encode("utf-8")
-        lens[i] = len(b)
-        chunks.append(b)
-    big = np.frombuffer(b"".join(chunks), dtype=np.uint8)
-    counts = np.maximum(lens - (k - 1), 0)
-    total_windows = int(big.shape[0]) - k + 1
-    if total_windows <= 0:
-        return np.empty(0, dtype=np.uint64), counts
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    if (
-        os.environ.get("LEXIS_ROLLING_BACKEND") in (None, "", "native")
-        and _native_fused_available()
-    ):
-        # incremental per-doc rolling hash in C: O(1) per window (vs the
-        # Horner's k passes over the whole concat array) and no
-        # cross-boundary windows to mask out afterwards.  Bit-identical
-        # (mod-2^64 unsigned arithmetic; parity-tested cross-backend).
-        from lexis_minhash_spark import kernels_native as KN
-
-        return KN.rolling_hashes_multi(big, starts, lens, k)
-    h_all = shingle_hashes_bytes(big, k)
-    # keep windows fully inside one document
-    keep = np.zeros(h_all.shape[0], dtype=bool)
-    for i in range(n_docs):
-        if counts[i] > 0:
-            keep[starts[i] : starts[i] + counts[i]] = True
-    return h_all[keep], counts
+    """Shingle hashes of a batch of normalized texts' UTF-8 bytes →
+    ``(hashes_concat: uint64[total], counts: int64[len(texts)])``."""
+    chunks = [t.encode("utf-8") for t in texts]
+    lens = np.fromiter(map(len, chunks), dtype=np.int64, count=len(chunks))
+    return shingle_hashes_concat(
+        np.frombuffer(b"".join(chunks), dtype=np.uint8), lens, k
+    )
 
 
 # ---------------------------------------------------------------------------
 # MinHash min-reduce (engine/signature.cr:7-30; weighted engine.cr:170-186)
 # ---------------------------------------------------------------------------
 
-def _u64_limbs16(x: np.ndarray, axis_new: int) -> np.ndarray:
-    """Split uint64 array into four 16-bit limbs as float64 (exact)."""
-    sh = (np.arange(4, dtype=np.uint64) * np.uint64(16))
-    if axis_new == 0:
-        out = ((x[None, :] >> sh[:, None]) & np.uint64(0xFFFF)).astype(np.float64)
-    else:
-        out = ((x[:, None] >> sh[None, :]) & np.uint64(0xFFFF)).astype(np.float64)
-    return out
+# Reusable (rows × S) uint64 blocks, one per S.  The pandas UDFs call the
+# kernels once per Arrow batch; fresh multi-MB temporaries page-fault on
+# every call, ``out=`` reuse does not.
+_U64_SCRATCH_CACHE: dict[int, np.ndarray] = {}
 
 
-def _prep_coeff_limbs(a: np.ndarray, b: np.ndarray):
-    """Precompute the fused coefficient matrices for _mulshift_high32.
-
-    Derivation (see _mulshift_high32): with 16-bit limbs a_j / h_i / b_m and
-    column sums L_k = Σ_{i+j=k} h_i a_j + b_k, the high 32 bits of
-    (a*h + b) mod 2^64 are
-
-        H = (L2 + 2^16·L3 + floor((L0 + 2^16·L1) / 2^32)) mod 2^32
-
-    and both L0 + 2^16·L1 and L2 + 2^16·L3 are single matmuls against
-    fixed coefficient matrices:
-
-        L0 + 2^16·L1 = [h0, 2^16·h1] @ [[a0 + 2^16·a1], [a0]] + (b0 + 2^16·b1)
-        L2 + 2^16·L3 = [h0, h1, h2, 2^16·h3]
-                        @ [[a2 + 2^16·a3], [a1 + 2^16·a2], [a0 + 2^16·a1], [a0]]
-                        + (b2 + 2^16·b3)
-
-    Every partial sum stays < 2^51 << 2^53 → float64-exact.
-
-    The returned matrices are PRESCALED by 2^-32: multiplying a coefficient
-    by a power of two scales every product and every partial sum by that
-    power exactly (float64 rounding commutes with power-of-two scaling), so
-    the matmul yields Y·2^-32 / Z·2^-32 bit-exactly while saving one full
-    (n × S) elementwise pass in the carry chain (measured ~9%; the fused
-    single-GEMM and fmod variants both measured SLOWER — see BENCH.md).
-    """
-    al = _u64_limbs16(a, 0)  # (4, S)
-    bl = _u64_limbs16(b, 0)
-    two16 = 65536.0
-    inv32 = 2.0**-32
-    # bias rows are FOLDED into the coefficient matrices (the input matrices
-    # carry a constant ones column), saving one full elementwise pass per
-    # matmul: Y = [h0, 2^16·h1, 1] @ caY ; Z = [h0, h1, h2, 2^16·h3, 1] @ caZ
-    ca = np.vstack([al[0] + two16 * al[1], al[0], bl[0] + two16 * bl[1]]) * inv32
-    cz = (
-        np.vstack(
-            [
-                al[2] + two16 * al[3],
-                al[1] + two16 * al[2],
-                al[0] + two16 * al[1],
-                al[0],
-                bl[2] + two16 * bl[3],
-            ]
-        )
-        * inv32
-    )  # (5, S)
-    return ca, cz
-
-
-# Coefficient-limb cache: _prep_coeff_limbs is pure in (a, b), and the
-# pandas UDFs call minhash_batch once per Arrow batch with the SAME config
-# coefficients — uncached, the limb split + two vstacks rerun per batch
-# (round-3 verdict item #5).  Keyed on the raw coefficient bytes (S=100 →
-# 1.6 KB per key, a few configs per process); bounded like _SCRATCH_CACHE.
-_COEFF_CACHE: dict[bytes, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _coeff_limbs_cached(a: np.ndarray, b: np.ndarray):
-    key = a.tobytes() + b.tobytes()
-    c = _COEFF_CACHE.get(key)
-    if c is None:
-        if len(_COEFF_CACHE) >= 8:
-            _COEFF_CACHE.clear()
-        c = _prep_coeff_limbs(a, b)
-        _COEFF_CACHE[key] = c
-    return c
-
-
-class _MulShiftScratch:
-    """Reusable block buffers.  Fresh 64 MB allocations page-fault heavily on
-    microVM hosts (measured ~30x slower than ``out=`` reuse), so every
-    elementwise pass below writes into preallocated scratch."""
-
-    def __init__(self, max_rows: int, s: int):
-        self.max_rows = max_rows
-        self.h_lim = np.empty((max_rows, 4), dtype=np.float64)
-        self.XY = np.empty((max_rows, 3), dtype=np.float64)
-        self.XY[:, 2] = 1.0  # constant ones column (bias fold)
-        self.XZ = np.empty((max_rows, 5), dtype=np.float64)
-        self.XZ[:, 4] = 1.0
-        self.Y = np.empty((max_rows, s), dtype=np.float64)
-        self.Z = np.empty((max_rows, s), dtype=np.float64)
-        self.m32 = np.empty((max_rows, s), dtype=np.uint32)
-        self.fw = np.empty((max_rows, s), dtype=np.float64)
-
-
-# One cached scratch per (rows, s) shape, keyed on last use.  The pandas
-# UDFs call minhash_batch once per Arrow batch; without the cache every
-# batch re-allocates ~50 MB of scratch, which page-faults on this host
-# class (BENCH.md).  Python workers are single-threaded, and the buffers
-# are fully overwritten per call, so reuse across calls is safe.
-_SCRATCH_CACHE: dict[tuple[int, int], _MulShiftScratch] = {}
-
-
-def _get_scratch(max_rows: int, s: int) -> _MulShiftScratch:
-    key = (max_rows, s)
-    sc = _SCRATCH_CACHE.get(key)
-    if sc is None:
-        if len(_SCRATCH_CACHE) >= 4:  # bounded RSS across shapes
-            _SCRATCH_CACHE.clear()
-        sc = _MulShiftScratch(max_rows, s)
-        _SCRATCH_CACHE[key] = sc
-    return sc
-
-
-class _U64Scratch:
-    def __init__(self, max_rows: int, s: int):
-        self.max_rows = max_rows
-        self.m = np.empty((max_rows, s), dtype=np.uint64)
-
-
-_U64_SCRATCH_CACHE: dict[int, _U64Scratch] = {}
-
-
-def _get_u64_scratch(max_rows: int, s: int) -> _U64Scratch:
+def _get_u64_scratch(max_rows: int, s: int) -> np.ndarray:
     sc = _U64_SCRATCH_CACHE.get(s)
-    if sc is None or sc.max_rows < max_rows:
-        _U64_SCRATCH_CACHE.clear()  # bounded RSS
-        sc = _U64Scratch(max_rows, s)
+    if sc is None or sc.shape[0] < max_rows:
+        if len(_U64_SCRATCH_CACHE) >= 4:  # bounded RSS across shapes
+            _U64_SCRATCH_CACHE.clear()
+        sc = np.empty((max_rows, s), dtype=np.uint64)
         _U64_SCRATCH_CACHE[s] = sc
     return sc
 
 
-_U64_SHIFT32 = np.uint64(32)
-
-
 def _mulshift_high32_u64(
     h: np.ndarray, a: np.ndarray, b: np.ndarray,
-    scratch: _U64Scratch | None = None,
+    scratch: np.ndarray | None = None,
     shift: bool = True,
 ) -> np.ndarray:
-    """``((a*h + b) mod 2^64) >> 32`` via direct uint64 wraparound →
-    uint64[n, S] view into ``scratch``.  Three elementwise passes
-    (mul, add, shift) versus the limb-GEMM path's 2 GEMMs + 6
-    carry/mod passes — bit-identical by construction (C unsigned
-    wraparound IS mod 2^64).
+    """``((a*h + b) mod 2^64) >> 32`` for every (shingle, hash-fn) pair →
+    uint64[n, S] view into ``scratch`` (consume before the next call).
+    Three in-place passes (mul, add, shift); C unsigned wraparound IS
+    mod 2^64.
 
     ``shift=False`` returns the full 64-bit ``(a*h + b) mod 2^64``:
     ``>> 32`` is monotone non-decreasing, so it commutes with the
-    min-reduce — the caller shifts only the REDUCED (docs × S) block,
-    saving one full-size pass (same deferral family as the GEMM path's
-    scale_out=False).
-
-    Which path is faster is HOST-DEPENDENT: earlier sandbox hosts ran
-    NumPy's u64 ``*`` ~100× slower than float64 (the measurement that
-    motivated the limb-GEMM formulation); the current host runs u64
-    multiply at float64 parity, making this path ~2.5× faster
-    end-to-end.  ``_pick_mulshift_backend`` measures both once per
-    process and picks the winner (override: LEXIS_MULSHIFT_BACKEND)."""
+    min-reduce and the caller shifts only the REDUCED (docs × S) block."""
     n = int(h.shape[0])
     s = int(a.shape[0])
-    if scratch is None or scratch.max_rows < n:
+    if scratch is None or scratch.shape[0] < n:
         scratch = _get_u64_scratch(n, s)
-    m = scratch.m[:n]
+    m = scratch[:n]
     np.multiply(h[:, None], a[None, :], out=m)
     m += b[None, :]
     if shift:
@@ -409,143 +237,96 @@ def _mulshift_high32_u64(
     return m
 
 
-_MULSHIFT_BACKEND: str | None = None
+def _doc_blocks(counts: np.ndarray, s: int) -> list[tuple]:
+    """Group consecutive non-empty documents into blocks of about
+    BLOCK_ELEMS (shingles × S) elements, never splitting a document →
+    ``(doc_idx, lo, hi, local_starts)`` per block, where ``[lo, hi)`` is
+    the block's slice of the hash stream and ``local_starts`` its
+    documents' offsets within that slice (the ``reduceat`` indices)."""
+    starts = np.cumsum(counts) - counts
+    ne_idx = np.nonzero(counts > 0)[0]
+    rows_per_block = max(1, BLOCK_ELEMS // s)
+    bounds = [0]
+    rows = 0
+    for pos, cnt in enumerate(counts[ne_idx].tolist()):
+        if rows > 0 and rows + cnt > rows_per_block:
+            bounds.append(pos)
+            rows = 0
+        rows += cnt
+    bounds.append(ne_idx.shape[0])
+    blocks = []
+    for first, end in zip(bounds[:-1], bounds[1:]):
+        if first < end:
+            docs = ne_idx[first:end]
+            lo = int(starts[docs[0]])
+            hi = int(starts[docs[-1]] + counts[docs[-1]])
+            blocks.append((docs, lo, hi, (starts[docs] - lo).astype(np.intp)))
+    return blocks
 
 
-def _native_fused_available() -> bool:
-    """True when the fused C kernel (kernels_native) compiled + loaded."""
-    try:
-        from lexis_minhash_spark import kernels_native as KN
-
-        return KN.load() is not None
-    except Exception:  # pragma: no cover — any import/build issue → NumPy
-        return False
+def _block_scratch(blocks: list[tuple], s: int) -> np.ndarray:
+    return _get_u64_scratch(max(hi - lo for _, lo, hi, _ in blocks), s)
 
 
-def _pick_mulshift_backend(s: int) -> str:
-    """One-time per-process calibration: time one block through each
-    backend on synthetic data and keep the fastest (ties → fewer
-    passes).  ~10 ms once; env LEXIS_MULSHIFT_BACKEND=native|u64|gemm
-    pins it (tests use this to assert cross-backend parity).  The
-    ``native`` candidate is the fused one-pass C kernel
-    (kernels_native.py) and only competes when it compiled+loaded on
-    this host; it is bit-identical to the NumPy backends by construction
-    (C unsigned arithmetic IS mod 2^64; the >>32 commutes with min)."""
-    global _MULSHIFT_BACKEND
-    env = os.environ.get("LEXIS_MULSHIFT_BACKEND")
-    if env in ("u64", "gemm"):
-        return env
-    if env == "native" and _native_fused_available():
-        return "native"
-    if _MULSHIFT_BACKEND is not None:
-        return _MULSHIFT_BACKEND
-    import time as _time
-
-    n = max(256, BLOCK_ELEMS // max(s, 1))
-    h = (np.arange(1, n + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15))
-    a = (np.arange(1, s + 1, dtype=np.uint64) * np.uint64(0xBF58476D1CE4E5B9)) | np.uint64(1)
-    b = np.arange(s, dtype=np.uint64) * np.uint64(0x94D049BB133111EB)
-    coeffs = _prep_coeff_limbs(a, b)
-    candidates = ["u64", "gemm"]
-    if _native_fused_available():
-        from lexis_minhash_spark import kernels_native as KN
-
-        starts = np.zeros(1, dtype=np.int64)
-        counts = np.array([n], dtype=np.int64)
-        candidates.append("native")
-    best = {}
-    for name in candidates:
-        t_best = None
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            if name == "u64":
-                _mulshift_high32_u64(h, a, b)
-            elif name == "gemm":
-                _mulshift_high32(h, coeffs, scale_out=False)
-            else:
-                KN.minhash_fused(h, starts, counts, a, b)
-            dt = _time.perf_counter() - t0
-            t_best = dt if t_best is None else min(t_best, dt)
-        best[name] = t_best
-    _MULSHIFT_BACKEND = min(best, key=lambda k: best[k])
-    return _MULSHIFT_BACKEND
-
-
-def _mulshift_high32(
-    h: np.ndarray,
-    coeffs,
-    scratch: _MulShiftScratch | None = None,
-    scale_out: bool = True,
+def _minhash_batch_u64(
+    h: np.ndarray, counts: np.ndarray, a: np.ndarray, b: np.ndarray
 ) -> np.ndarray:
-    """``((a*h + b) mod 2^64) >> 32`` for all (shingle, hash-fn) pairs →
-    float64[n, S] with integer values in [0, 2^32).  Returns a view into
-    ``scratch`` when provided — consume before the next call.
-
-    ``scale_out=False`` returns H·2^-32 (values in [0, 1), exact — a
-    power-of-two scale of the same integers), skipping the final (n × S)
-    multiply pass.  min-reduce commutes with a positive scale, so the
-    unweighted caller rescales the small REDUCED (docs × S) matrix
-    instead; the weighted caller folds the 2^32 into its per-shingle
-    divisor (one 1-D pass) — round-3 verdict item #5.
-
-    Exact 16-bit-limb float64 arithmetic (see _prep_coeff_limbs for the
-    fused two-matmul derivation; every intermediate < 2^51 << 2^53, all
-    divisions by powers of two → exact).  Replaces the naive uint64 path
-    because x86 lacks SIMD 64-bit multiply and NumPy's u64 ``*`` is ~100x
-    slower than float64 on the target hosts; bit-identical values
-    (cross-checked against the u64 path and the scalar oracle in tests).
-
-    Pass census per (shingle × S) element: 2 GEMMs (biases folded via ones
-    columns, coefficients prescaled by 2^-32 — see _prep_coeff_limbs) +
-    6 carry/mod passes.  Negative results kept on record (BENCH.md): fmod
-    measured ~5× slower than the floor chain; fusing both GEMMs into one
-    (n×6)·(6×2S) block matmul measured ~2× slower (1.5× FLOPs + larger
-    output churn)."""
-    ca, cz = coeffs
-    n = int(h.shape[0])
-    s = ca.shape[1]
-    if scratch is None or scratch.max_rows < n:
-        scratch = _get_scratch(n, s)
-    two16, inv32, two32 = 65536.0, 2.0**-32, 4294967296.0
-    # 16-bit limbs via zero-copy little-endian view
-    h_lim = scratch.h_lim[:n]
-    np.copyto(h_lim, np.ascontiguousarray(h).view(np.uint16).reshape(n, 4))
-    XY, XZ = scratch.XY[:n], scratch.XZ[:n]
-    XY[:, 0] = h_lim[:, 0]
-    np.multiply(h_lim[:, 1], two16, out=XY[:, 1])
-    XZ[:, 0] = h_lim[:, 0]
-    XZ[:, 1] = h_lim[:, 1]
-    XZ[:, 2] = h_lim[:, 2]
-    np.multiply(h_lim[:, 3], two16, out=XZ[:, 3])
-    Y, Z = scratch.Y[:n], scratch.Z[:n]
-    # Y' = (L0 + 2^16*L1 + by)·2^-32 exactly (prescaled coefficients);
-    # the carry into bit 32 is floor(Y')
-    np.matmul(XY, ca, out=Y)
-    np.floor(Y, out=Y)            # c2 (integer value)
-    np.multiply(Y, inv32, out=Y)  # c2·2^-32
-    # Z' = (L2 + 2^16*L3 + bz)·2^-32 + c2·2^-32 ; H = frac(Z')·2^32
-    np.matmul(XZ, cz, out=Z)
-    Z += Y
-    np.floor(Z, out=Y)
-    np.subtract(Z, Y, out=Z)      # H·2^-32
-    if scale_out:
-        np.multiply(Z, two32, out=Z)  # H
-    return Z
+    """uint64 NumPy twin of ``kernels_native.minhash_fused``: per block one
+    multiply-shift, a ``minimum.reduceat`` on the full 64-bit values at
+    document boundaries, and the ``>> 32`` on the reduced block only."""
+    s = int(a.shape[0])
+    out = np.full((int(counts.shape[0]), s), _U32_FULL, dtype=np.uint32)
+    blocks = _doc_blocks(counts, s)
+    if not blocks:
+        return out
+    scratch = _block_scratch(blocks, s)
+    for docs, lo, hi, local_starts in blocks:
+        mu = _mulshift_high32_u64(h[lo:hi], a, b, scratch, shift=False)
+        reduced = np.minimum.reduceat(mu, local_starts, axis=0)
+        np.right_shift(reduced, _U64_SHIFT32, out=reduced)
+        out[docs] = reduced.astype(np.uint32)
+    return out
 
 
-def minhash_from_hashes(
-    h64: np.ndarray, a: np.ndarray, b: np.ndarray
+def _minhash_batch_weighted(
+    h: np.ndarray, counts: np.ndarray, a: np.ndarray, b: np.ndarray,
+    w: np.ndarray,
 ) -> np.ndarray:
-    """Unweighted signature of one hash stream → uint32[signature_size].
-    ``((a[i]*h + b[i]) mod 2^64) >> 32`` min-reduced over shingles
-    (engine/signature.cr:22-27). Empty stream → all UInt32::MAX
-    (init value, engine/signature.cr:18)."""
-    s = a.shape[0]
-    if h64.size == 0:
-        return np.full(s, _U32_FULL, dtype=np.uint32)
-    coeffs = _coeff_limbs_cached(a, b)
-    m = _mulshift_high32(h64.astype(np.uint64), coeffs)
-    return m.min(axis=0).astype(np.uint32)
+    """Weighted update (engine.cr:170-186) on uint64 NumPy: w <= 0 shingles
+    skipped, divisor = log(1+w) if w < 1 else w, slot value =
+    fmod(h32 / divisor, 4294967295.0) truncated to uint32, min-reduced.
+
+    Raises ValueError on a positive weight so small that log(1.0 + w)
+    rounds to 0 (below about 1.1e-16): the reference divides by zero
+    there."""
+    n_docs = int(counts.shape[0])
+    s = int(a.shape[0])
+    out = np.full((n_docs, s), _U32_FULL, dtype=np.uint32)
+    keep = w > 0.0  # drop non-positive (and NaN) weights, engine.cr:175-177
+    if not keep.all():
+        doc_ids = np.repeat(np.arange(n_docs), counts)
+        h, w = h[keep], w[keep]
+        counts = np.bincount(doc_ids[keep], minlength=n_docs)
+    # NB: the reference computes Math.log(1.0 + w) (engine.cr:179) — NOT
+    # log1p — and the two differ in the last ulp for general w; mirror it.
+    divisor = np.where(w < 1.0, np.log(1.0 + w), w)
+    zero = divisor == 0.0
+    if zero.any():
+        raise ValueError(
+            f"shingle weight {float(w[zero][0])!r} is too small: "
+            "log(1.0 + w) rounds to 0, so the weighted update has no divisor"
+        )
+    blocks = _doc_blocks(counts, s)
+    if not blocks:
+        return out
+    scratch = _block_scratch(blocks, s)
+    for docs, lo, hi, local_starts in blocks:
+        fw = _mulshift_high32_u64(h[lo:hi], a, b, scratch).astype(np.float64)
+        fw /= divisor[lo:hi, None]
+        np.fmod(fw, U32_MAX_F, out=fw)
+        # trunc toward zero: every value is in [0, UInt32::MAX)
+        out[docs] = np.minimum.reduceat(fw.astype(np.uint32), local_starts, axis=0)
+    return out
 
 
 def minhash_batch(
@@ -557,158 +338,34 @@ def minhash_batch(
 ) -> np.ndarray:
     """Signatures for a whole batch → uint32[n_docs, signature_size].
 
-    One blocked ``(shingles × signature_size)`` multiply-shift followed by
-    ``np.minimum.reduceat`` at document boundaries — the vectorized
-    equivalent of the reference's nested per-shingle/per-hash loops.
+    Unweighted: ``((a[i]*h + b[i]) mod 2^64) >> 32`` min-reduced over each
+    document's shingles (engine/signature.cr:22-27) — the fused C kernel
+    when it loads, else the blocked uint64 NumPy path.
 
     ``weights_concat`` (float64, parallel to ``hashes_concat``) switches to
-    the weighted update (engine.cr:170-186): effective weight = max(w,0),
-    w<=0 shingles skipped, divisor = log(1+w) if w<1 else w, value =
-    fmod(h32/divisor, 4294967295.0) truncated to uint32.
+    the weighted update (see _minhash_batch_weighted).
 
     Documents with zero shingles yield the UInt32::MAX-filled init vector —
     callers apply the zero-signature gates *before* building the batch.
     """
-    s = int(a.shape[0])
-    n_docs = int(counts.shape[0])
-    out = np.full((n_docs, s), _U32_FULL, dtype=np.uint32)
-    if hashes_concat.size == 0:
-        return out
-
-    h = hashes_concat
-    w = weights_concat
-    eff_counts = counts.astype(np.int64)
-    backend = _pick_mulshift_backend(s) if w is None else "gemm"
-    if w is None and backend == "native":
-        # fused one-pass C kernel: multiply-shift + >>32 + u32 min-reduce
-        # per doc in a single streaming pass (no (shingles × S) scratch at
-        # all — the accumulator row stays in L1).  Duplicate shingles are
-        # just re-minimized, like the u64 backend.  Bit-identical to the
-        # NumPy backends (cross-backend parity tests); measured 0.893 s →
-        # 0.156 s for 4.1M shingles × 100 slots single-thread.
-        from lexis_minhash_spark import kernels_native as KN
-
-        starts_all = np.concatenate(([0], np.cumsum(eff_counts)[:-1]))
-        return KN.minhash_fused(
-            h.astype(np.uint64, copy=False), starts_all, eff_counts, a, b
+    h = np.asarray(hashes_concat, dtype=np.uint64)
+    counts = np.asarray(counts, dtype=np.int64)
+    if weights_concat is not None:
+        return _minhash_batch_weighted(
+            h, counts, a, b, np.asarray(weights_concat, dtype=np.float64)
         )
-    use_u64 = w is None and backend == "u64"
-    if w is None and h.size and not use_u64:
-        # min-reduce is idempotent in the unweighted path (the slot value is
-        # a pure function of the shingle hash), so duplicate shingles within
-        # a document are dropped before the expensive multiply-shift.
-        # Repetitive corpora measure up to ~30% duplicates.  GEMM backend
-        # only: there the lexsort is ~2% of kernel time; on the u64 backend
-        # the multiply-shift got cheap enough that the lexsort costs MORE
-        # than the duplicate work it saves (measured ~1.2 s sort vs ~0.4 s
-        # saved at 4.1M shingles), so duplicates are just re-minimized.
-        # NOT valid for the weighted paths: a caller
-        # may supply different weights for equal hashes (from-hashes API).
-        doc_ids = np.repeat(np.arange(n_docs), eff_counts)
-        order = np.lexsort((h, doc_ids))
-        h_s, d_s = h[order], doc_ids[order]
-        uniq = np.empty(h_s.shape[0], dtype=bool)
-        uniq[0] = True
-        np.logical_or(h_s[1:] != h_s[:-1], d_s[1:] != d_s[:-1], out=uniq[1:])
-        h = h_s[uniq]
-        eff_counts = np.bincount(d_s[uniq], minlength=n_docs).astype(np.int64)
-    if w is not None:
-        # drop non-positive weights (engine.cr:175-177)
-        w_eff = np.maximum(w, 0.0)
-        keep = w_eff > 0.0
-        if not keep.all():
-            doc_ids = np.repeat(np.arange(n_docs), eff_counts)
-            h = h[keep]
-            kept_docs = doc_ids[keep]
-            eff_counts = np.bincount(kept_docs, minlength=n_docs).astype(np.int64)
-            w_eff = w_eff[keep]
-        # NB: the reference computes Math.log(1.0 + w) (engine.cr:179) — NOT
-        # log1p — and the two differ in the last ulp for general w; mirror it.
-        divisor = np.where(w_eff < 1.0, np.log(1.0 + w_eff), w_eff)
-        # fold the deferred 2^32 output scale into the divisor (see
-        # _mulshift_high32 scale_out=False): (H·2^-32)/(divisor·2^-32) is
-        # bit-identical to H/divisor — numerator and denominator are both
-        # exact power-of-two scalings, so the rounded quotient is of the
-        # same real value.  One 1-D pass here replaces a (shingles × S)
-        # multiply pass per block.
-        divisor = divisor * 2.0**-32
-    if h.size == 0:
-        return out
+    if _pick_mulshift_backend(int(a.shape[0])) == "native":
+        return KN.minhash_fused(h, np.cumsum(counts) - counts, counts, a, b)
+    return _minhash_batch_u64(h, counts, a, b)
 
-    nonempty = eff_counts > 0
-    starts_all = np.concatenate(([0], np.cumsum(eff_counts)[:-1]))
-    ne_idx = np.nonzero(nonempty)[0]
-    ne_starts = starts_all[ne_idx]
-    ne_counts = eff_counts[ne_idx]
 
-    # block over documents so the (shingles x S) intermediate stays
-    # bounded; each block is one multiply-shift pass + reduceat.  The
-    # unweighted path picks the calibrated multiply-shift backend (direct
-    # uint64 vs limb-GEMM — host-dependent, see _pick_mulshift_backend);
-    # the weighted path stays on the limb-GEMM (its divisor fold consumes
-    # the H·2^-32 float form directly).
-    coeffs = None if use_u64 else _coeff_limbs_cached(a, b)
-    rows_per_block = max(1, BLOCK_ELEMS // s)
-    # precompute block boundaries (consecutive docs until budget exceeded)
-    block_bounds = [0]
-    rows = 0
-    for idx in range(ne_idx.shape[0]):
-        cnt = int(ne_counts[idx])
-        if rows > 0 and rows + cnt > rows_per_block:
-            block_bounds.append(idx)
-            rows = 0
-        rows += cnt
-    block_bounds.append(ne_idx.shape[0])
-    max_rows = min(rows_per_block, int(h.shape[0]))
-    if len(block_bounds) > 2:
-        max_rows = max(
-            int(
-                (ne_starts[block_bounds[i + 1] - 1] + ne_counts[block_bounds[i + 1] - 1])
-                - ne_starts[block_bounds[i]]
-            )
-            for i in range(len(block_bounds) - 1)
-            if block_bounds[i] < block_bounds[i + 1]
-        )
-    scratch = _get_u64_scratch(max_rows, s) if use_u64 else _get_scratch(max_rows, s)
-    for bi in range(len(block_bounds) - 1):
-        doc_pos, end = block_bounds[bi], block_bounds[bi + 1]
-        if doc_pos >= end:
-            continue
-        lo = int(ne_starts[doc_pos])
-        hi = int(ne_starts[end - 1] + ne_counts[end - 1])
-        n_rows = hi - lo
-        if n_rows > scratch.max_rows:  # lone doc larger than the block budget
-            scratch = _get_u64_scratch(n_rows, s) if use_u64 else _get_scratch(n_rows, s)
-        local_starts = (ne_starts[doc_pos:end] - lo).astype(np.intp)
-        if use_u64:
-            # exact uint64 wraparound; min-reduce on the FULL 64-bit
-            # values (>>32 is monotone, so it commutes with min) and
-            # shift+downcast only the reduced (docs × S) block
-            mu = _mulshift_high32_u64(h[lo:hi], a, b, scratch, shift=False)
-            reduced_u = np.minimum.reduceat(mu, local_starts, axis=0)
-            np.right_shift(reduced_u, _U64_SHIFT32, out=reduced_u)
-            out[ne_idx[doc_pos:end]] = reduced_u.astype(np.uint32)
-            continue
-        # H·2^-32 units: the final ×2^32 pass is deferred past the reduce
-        # (unweighted) or folded into the divisor (weighted)
-        m = _mulshift_high32(h[lo:hi], coeffs, scratch, scale_out=False)
-        if w is not None:
-            dv = divisor[lo:hi]
-            fw = scratch.fw[:n_rows]
-            np.divide(m, dv[:, None], out=fw)  # = H / divisor_orig exactly
-            np.fmod(fw, U32_MAX_F, out=fw)
-            m32 = scratch.m32[:n_rows]
-            np.copyto(m32, fw, casting="unsafe")  # trunc toward zero (>=0)
-            out[ne_idx[doc_pos:end]] = np.minimum.reduceat(m32, local_starts, axis=0)
-        else:
-            # min-reduce directly on the exact float64 values, then rescale
-            # and convert only the reduced (n_docs × S) block — skips one
-            # full (shingles × S) copy pass AND the ×2^32 pass (min
-            # commutes with a positive scale; ·2^32 of an exact ·2^-32
-            # value is exact)
-            reduced = np.minimum.reduceat(m, local_starts, axis=0)
-            out[ne_idx[doc_pos:end]] = (reduced * 4294967296.0).astype(np.uint32)
-    return out
+def minhash_from_hashes(
+    h64: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """Unweighted signature of one hash stream → uint32[signature_size]
+    (a one-document minhash_batch).  Empty stream → all UInt32::MAX
+    (init value, engine/signature.cr:18)."""
+    return minhash_batch(h64, np.array([h64.size]), a, b)[0]
 
 
 def zero_signature(signature_size: int) -> np.ndarray:
@@ -857,7 +514,7 @@ def bytes_to_signature(blob: bytes) -> np.ndarray:
 # two of the four Hamming blocks identical across ALL documents, turning
 # the block candidate join into an all-pairs join.  The hashes are
 # therefore mixed to full 64-bit entropy with two fixed multiply-shift
-# draws (the same exact-limb kernel as MinHash):
+# draws (the same uint64 multiply-shift as MinHash):
 #   mixed = (msh(a1,b1,h) << 32) | msh(a2,b2,h)
 SIMHASH_MIX_SEED = 0x53494D48  # 'SIMH'
 
@@ -869,22 +526,14 @@ def _simhash_mix(h64: np.ndarray) -> np.ndarray:
     h = np.ascontiguousarray(h64, dtype=np.uint64)
     n = int(h.shape[0])
     out = np.empty(n, dtype=np.uint64)
-    use_u64 = _pick_mulshift_backend(2) == "u64"
-    coeffs = None if use_u64 else _coeff_limbs_cached(a, b)
-    # block with one reused scratch — an unblocked call allocates ~80 B of
-    # fresh scratch per shingle, which page-faults on this host class
+    # block with one reused scratch — an unblocked call allocates ~16 B of
+    # fresh scratch per shingle on every Arrow batch
     rows = max(1, min(BLOCK_ELEMS // 2, n))
-    scratch = _get_u64_scratch(rows, 2) if use_u64 else _get_scratch(rows, 2)
-    for lo_i in range(0, n, rows):
-        hi_i = min(lo_i + rows, n)
-        if use_u64:
-            mu = _mulshift_high32_u64(h[lo_i:hi_i], a, b, scratch)
-            out[lo_i:hi_i] = (mu[:, 0] << np.uint64(32)) | mu[:, 1]
-            continue
-        m = _mulshift_high32(h[lo_i:hi_i], coeffs, scratch)
-        out[lo_i:hi_i] = (m[:, 0].astype(np.uint64) << np.uint64(32)) | m[:, 1].astype(
-            np.uint64
-        )
+    scratch = _get_u64_scratch(rows, 2)
+    for lo in range(0, n, rows):
+        hi = min(lo + rows, n)
+        mu = _mulshift_high32_u64(h[lo:hi], a, b, scratch)
+        out[lo:hi] = (mu[:, 0] << _U64_SHIFT32) | mu[:, 1]
     return out
 
 
@@ -919,8 +568,7 @@ def simhash_batch(
     so each of the 64 planes is one shift/and pass + one add.reduceat over
     the shingle stream.  (The former (shingles × 64) int32 sign matrix
     allocated ~250 B/shingle fresh per Arrow batch — a page-fault hotspot on
-    this host class, see BENCH.md; shifts/ands on uint64 are SIMD-cheap,
-    only u64 multiply is slow.)"""
+    this host class, see BENCH.md; shifts/ands on uint64 are SIMD-cheap.)"""
     n_docs = int(counts.shape[0])
     out = np.zeros(n_docs, dtype=np.uint64)
     if hashes_concat.size == 0:

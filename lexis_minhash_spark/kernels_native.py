@@ -1,29 +1,29 @@
-"""Optional fused C kernel for the unweighted MinHash min-reduce.
+"""C kernels for the two hash primitives — the fast path of kernels.py.
 
-The NumPy formulation runs at >= 95% of NumPy's primitive throughput on
-this host (measured: u64 multiply 3.56 G/s, u64 add 3.26 G/s,
-minimum.reduceat 0.93 G/s — BENCH.md round-6 roofline), so the remaining
-per-core gap to the reference's published micro-op is a *formulation*
-limit: three memory passes (multiply, add, reduce) where one fused pass
-would do.  NumPy cannot fuse ufuncs; a ~30-line C kernel can:
+- ``minhash_fused``: multiply-shift + min-reduce in one streaming pass,
 
-    for each doc, for each shingle h, for j in 0..S-1:
-        acc[j] = min(acc[j], (uint32)((a[j]*h + b[j]) >> 32))
+      for each doc, for each shingle h, for j in 0..S-1:
+          acc[j] = min(acc[j], (uint32)((a[j]*h + b[j]) >> 32))
 
-The ``>> 32`` moves INSIDE the min here (monotone non-decreasing, so it
-commutes with min — same deferral family as the NumPy path's, just in
-the other direction), which makes the accumulator uint32 and lets the
-compiler use the AVX2 ``vpminud`` unsigned-32 min; C unsigned arithmetic
-is exactly mod 2^64, so the result is bit-identical to the NumPy
-backends (asserted by the cross-backend tests).
+  The ``>> 32`` sits inside the min (monotone non-decreasing, so it
+  commutes with min), which makes the accumulator uint32 and lets the
+  compiler vectorize the loop with an unsigned-32 min.  No (shingles × S)
+  intermediate exists; the accumulator row stays in L1.
+- ``rolling_hashes_multi``: the incremental per-document rolling hash,
+  O(1) per window and no windows across document boundaries.
 
-Build strategy: compiled AT FIRST USE with the system C compiler into a
-shared library cached on disk, keyed by source hash (one compile per
-host; concurrent Spark workers race-safely rename into place and every
-other process just dlopens).  No compiler, no flags that work, any
-error at all → ``load()`` returns None and kernels.py stays on the
-calibrated NumPy backends.  ctypes releases the GIL for the call, so
-Spark's per-core workers overlap fully.
+C unsigned arithmetic is exactly mod 2^64, so both are bit-identical to
+the uint64 NumPy twins in kernels.py (asserted by the parity tests).
+
+Build: compiled at first use with the system C compiler into a shared
+library cached per user (``_CACHE_DIR``, mode 0700) and keyed by source
+hash — one compile per host and user; concurrent Spark workers rename
+into place atomically and every other process just dlopens.  Before the
+dlopen the directory and the library must be owned by the current user
+and not group- or world-writable.  No compiler, a failed check or any
+other error → ``load()`` returns None (a failed check also warns once)
+and kernels.py runs on uint64 NumPy with identical results.  ctypes
+releases the GIL for the call, so Spark's per-core workers overlap fully.
 """
 
 from __future__ import annotations
@@ -31,8 +31,9 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import stat
 import subprocess
-import tempfile
+import warnings
 
 import numpy as np
 
@@ -93,14 +94,16 @@ void rolling_hashes_multi(const uint8_t *data, const int64_t *starts,
 }
 """
 
-_CACHE_DIR = os.path.join(tempfile.gettempdir(), "lexis_minhash_native")
+_CACHE_DIR = os.path.join(
+    os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache"),
+    "lexis_minhash_native",
+)
 _LIB = None
 _LOAD_TRIED = False
 
 
 def _build(src: str, path: str) -> bool:
     """Compile ``src`` → shared library at ``path`` (atomic rename)."""
-    os.makedirs(_CACHE_DIR, exist_ok=True)
     cfile = path + f".{os.getpid()}.c"
     tmpso = path + f".{os.getpid()}.tmp"
     with open(cfile, "w") as f:
@@ -127,18 +130,47 @@ def _build(src: str, path: str) -> bool:
                 pass
 
 
+def _untrusted(path: str) -> str | None:
+    """Why ``path`` must not be used for the library, or None if it is
+    owned by the current user and not group- or world-writable."""
+    st = os.stat(path)
+    if st.st_uid != os.getuid():
+        return f"{path} is owned by uid {st.st_uid}, not {os.getuid()}"
+    if st.st_mode & (stat.S_IWGRP | stat.S_IWOTH):
+        return f"{path} is group- or world-writable (mode {stat.S_IMODE(st.st_mode):o})"
+    return None
+
+
+def _library_path() -> str:
+    tag = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
+    return os.path.join(_CACHE_DIR, f"minhash_{tag}.so")
+
+
 def load():
-    """Return the ctypes-bound fused kernel, or None if unavailable."""
+    """Return the ctypes-bound kernels, or None if unavailable."""
     global _LIB, _LOAD_TRIED
     if _LOAD_TRIED:
         return _LIB
     _LOAD_TRIED = True
     if os.environ.get("LEXIS_NATIVE_KERNEL", "1") == "0":
         return None
-    tag = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    path = os.path.join(_CACHE_DIR, f"minhash_{tag}.so")
+    path = _library_path()
     try:
-        if not os.path.exists(path) and not _build(_C_SOURCE, path):
+        try:
+            os.makedirs(_CACHE_DIR, mode=0o700, exist_ok=True)
+            reason = _untrusted(_CACHE_DIR)
+        except OSError as e:
+            reason = f"cannot create {_CACHE_DIR}: {e}"
+        if reason is None:
+            if not os.path.exists(path) and not _build(_C_SOURCE, path):
+                return None
+            reason = _untrusted(path)
+        if reason is not None:
+            warnings.warn(
+                f"native kernel cache refused ({reason}); using the NumPy kernels",
+                RuntimeWarning,
+                stacklevel=2,
+            )
             return None
         lib = ctypes.CDLL(path)
         lib.minhash_fused.restype = None

@@ -7,7 +7,7 @@ Pipeline shape (axes: pyspark × audio):
         └─ decode PCM (per-row: ragged binary — the one unavoidable
            per-row step) → frame energy envelope → loudness-invariant
            4-bit quantization → w-frame rolling shingles hashed with the
-           SAME P=31 byte kernel (kernels.shingle_hashes_bytes) →
+           SAME P=31 byte kernel (kernels.shingle_hashes_concat) →
            minhash_batch → band_hashes_batch
     then ops.bands_table / candidate_pairs / verified_pairs unchanged —
     the audio path reuses every downstream relational stage (zero-sig
@@ -109,25 +109,11 @@ def audio_signature_udf(
                     continue
                 streams.append(quantize_envelope(pcm, int(sr), frame_ms))
             lens = np.array([s.shape[0] for s in streams], dtype=np.int64)
-            counts = np.maximum(lens - (window_frames - 1), 0)
-            ok = counts > 0
             big = (
-                np.concatenate([s for s in streams if s.shape[0] > 0])
-                if lens.sum() > 0
-                else np.empty(0, dtype=np.uint8)
+                np.concatenate(streams) if n else np.empty(0, dtype=np.uint8)
             )
-            if big.size >= window_frames:
-                h_all = K.shingle_hashes_bytes(big, window_frames)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                # windows fully inside one clip: global index minus its
-                # clip's start must be < the clip's window count
-                idx = np.arange(h_all.shape[0], dtype=np.int64)
-                owner = np.searchsorted(starts, idx, side="right") - 1
-                keep = (idx - starts[owner]) < counts[owner]
-                hc = h_all[keep]
-            else:
-                hc = np.empty(0, dtype=np.uint64)
-                counts = np.zeros(n, dtype=np.int64)
+            hc, counts = K.shingle_hashes_concat(big, lens, window_frames)
+            ok = counts > 0
             sig_mat = np.zeros((n, cfg.signature_size), dtype=np.uint32)
             if hc.size:
                 sig_mat[ok] = K.minhash_batch(hc, counts[ok], a, b)

@@ -290,7 +290,9 @@ def candidate_pairs_grouped(
             )
         ).alias("p")
     ).select("p.a", "p.b")
-    return pairs.distinct()
+    # a document listed twice in one bucket (two of its packed band keys
+    # collide) would pair with itself
+    return pairs.where(F.col("a") < F.col("b")).distinct()
 
 
 def similarity_udf_binary():

@@ -17,6 +17,15 @@ U32_MAX = (1 << 32) - 1
 _WS = re.compile(r"\s+")
 
 
+def _weight_divisor(w: float) -> float:
+    """engine.cr:179 — log(1 + w) below 1, else w.  A positive w so small
+    that log(1.0 + w) == 0 would divide by zero: reject it by name."""
+    val = math.log(1.0 + w) if w < 1.0 else w
+    if val == 0.0:
+        raise ValueError(f"shingle weight {w!r} is too small: log(1.0 + w) rounds to 0")
+    return val
+
+
 def oracle_coefficients(seed: int, signature_size: int) -> tuple[list[int], list[int]]:
     """engine/config.cr:45-67."""
     seed_u64 = seed & MASK64
@@ -32,6 +41,11 @@ def oracle_coefficients(seed: int, signature_size: int) -> tuple[list[int], list
 
 
 def oracle_shingle_hashes(text: str, k: int) -> list[int]:
+    """engine/rolling.cr:44-62 over the text's UTF-8 bytes."""
+    return oracle_rolling_hashes(text.encode("utf-8"), k)
+
+
+def oracle_rolling_hashes(data: bytes, k: int) -> list[int]:
     """engine/rolling.cr:44-62 — incremental rolling form, byte-at-a-time."""
     p = 31
     power = 1
@@ -40,7 +54,7 @@ def oracle_shingle_hashes(text: str, k: int) -> list[int]:
     current = 0
     buf: list[int] = []
     out: list[int] = []
-    for byte in text.encode("utf-8"):
+    for byte in data:
         if len(buf) == k:
             out_byte = buf.pop(0)
             current = (current - out_byte * power) & MASK64
@@ -93,7 +107,7 @@ def oracle_signature(
             eff = max(w, 0.0)
             if eff <= 0.0:
                 continue
-            val = math.log(1.0 + eff) if eff < 1.0 else eff
+            val = _weight_divisor(eff)
             for i in range(num_hashes):
                 combined = ((a[i] * h64 + b[i]) & MASK64) >> 32
                 weighted = math.fmod(float(combined) / val, float(U32_MAX))
@@ -123,7 +137,7 @@ def oracle_signature_from_hashes(
             eff = max(w, 0.0)
             if eff <= 0.0:
                 continue
-            val = math.log(1.0 + eff) if eff < 1.0 else eff
+            val = _weight_divisor(eff)
             for i in range(num_hashes):
                 combined = ((a[i] * h64 + b[i]) & MASK64) >> 32
                 weighted = math.fmod(float(combined) / val, float(U32_MAX))
@@ -131,6 +145,14 @@ def oracle_signature_from_hashes(
                 if wh < sig[i]:
                     sig[i] = wh
     return sig
+
+
+def oracle_simhash_mix(h64: int, a: list[int], b: list[int]) -> int:
+    """kernels._simhash_mix of one shingle hash: two multiply-shift draws,
+    the first in the high 32 bits."""
+    hi = ((a[0] * h64 + b[0]) & MASK64) >> 32
+    lo = ((a[1] * h64 + b[1]) & MASK64) >> 32
+    return (hi << 32) | lo
 
 
 def oracle_bands(signature: list[int], num_bands: int, rows_per_band: int) -> list[tuple[int, int]]:

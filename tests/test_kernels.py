@@ -3,6 +3,8 @@ plus ports of the reference's behavioral spec assertions
 (/root/reference/spec/*.cr — cited per test)."""
 
 import math
+import os
+import stat
 
 import numpy as np
 import pytest
@@ -224,6 +226,22 @@ class TestWeighted:
         got = K.minhash_batch(h, np.array([len(h)]), A, B, weights_concat=w)[0].tolist()
         assert got == O.oracle_signature(t, AO, BO, 5, 4, weights=self.W)
 
+    def test_tiny_positive_weight_rejected(self):
+        # log(1.0 + 1e-17) == 0: the weighted update would divide by zero,
+        # so the kernel and the oracle both refuse the weight by name
+        hs = [123456789, 987654321]
+        w = [2.0, 1e-17]
+        with pytest.raises(ValueError, match="1e-17"):
+            K.minhash_batch(np.array(hs, dtype=np.uint64), np.array([2]), A, B,
+                            weights_concat=np.array(w))
+        with pytest.raises(ValueError, match="1e-17"):
+            O.oracle_signature_from_hashes(hs, AO, BO, w)
+        t = "hello world test document"
+        with pytest.raises(ValueError, match="1e-17"):
+            self._kernel_weighted(t, {"hello": 1e-17})
+        with pytest.raises(ValueError, match="1e-17"):
+            O.oracle_signature(t, AO, BO, 5, 4, weights={"hello": 1e-17})
+
 
 class TestBandsAndSimilarity:
     def test_band_parity(self):
@@ -347,70 +365,74 @@ class TestSimhash:
         assert blocks.tolist() == [0xCDEF, 0x89AB, 0x4567, 0x0123]
 
 
+def _native():
+    """The C kernels, or a clean skip on a host without a C compiler."""
+    from lexis_minhash_spark import kernels_native as KN
+
+    if KN.load() is None:
+        pytest.skip("no native kernel on this host")
+    return KN
+
+
+def _oracle_sigs(h, counts, a, b, w=None):
+    out, pos = [], 0
+    for c in counts.tolist():
+        ws = None if w is None else w[pos : pos + c].tolist()
+        out.append(O.oracle_signature_from_hashes(
+            h[pos : pos + c].tolist(), a.tolist(), b.tolist(), ws))
+        pos += c
+    return np.array(out, dtype=np.uint32).reshape(len(counts), len(a))
+
+
 class TestMulshiftBackends:
-    """Round-5: the multiply-shift backend is host-calibrated (direct
-    uint64 vs limb-GEMM).  Both must be bit-identical on every input —
-    C unsigned wraparound IS mod 2^64, so this is a hard equality."""
+    """The two hash-kernel families — fused C (kernels_native) and uint64
+    NumPy — must be bit-identical to each other and to the scalar oracle
+    on every input: C unsigned wraparound IS mod 2^64, so this is a hard
+    equality.  Each implementation is called directly."""
 
-    def _signatures(self, backend, h, counts, a, b, monkeypatch):
-        import importlib
-        monkeypatch.setenv("LEXIS_MULSHIFT_BACKEND", backend)
-        return K.minhash_batch(h, counts, a, b)
-
-    def test_backends_bit_identical(self, monkeypatch):
+    def test_backends_bit_identical(self):
         rng = np.random.default_rng(7)
         counts = rng.integers(0, 90, 64)
         n = int(counts.sum())
         h = rng.integers(0, 2**64, n, dtype=np.uint64)
         a, b = seeded_coefficients(12345, 100)
-        s1 = self._signatures("u64", h, counts, a, b, monkeypatch)
-        s2 = self._signatures("gemm", h, counts, a, b, monkeypatch)
-        assert np.array_equal(s1, s2)
+        ref = _oracle_sigs(h, counts, a, b)
+        assert np.array_equal(K._minhash_batch_u64(h, counts, a, b), ref)
+        assert np.array_equal(K.minhash_batch(h, counts, a, b), ref)
 
-    def test_native_fused_bit_identical(self, monkeypatch):
-        # round-6: the fused C kernel (kernels_native) must be bit-equal
-        # to the NumPy backends on random inputs, including empty docs
-        # (UInt32::MAX init rows).  Skips cleanly when no C compiler.
-        from lexis_minhash_spark import kernels_native as KN
-
-        if KN.load() is None:
-            import pytest
-
-            pytest.skip("no native kernel on this host")
+    def test_native_fused_bit_identical(self):
+        # random inputs, including an empty doc (UInt32::MAX init row)
+        KN = _native()
         rng = np.random.default_rng(11)
         counts = rng.integers(0, 90, 64)
-        counts[5] = 0  # explicit empty doc
+        counts[5] = 0
         n = int(counts.sum())
         h = rng.integers(0, 2**64, n, dtype=np.uint64)
         a, b = seeded_coefficients(12345, 100)
-        ref = self._signatures("u64", h, counts, a, b, monkeypatch)
-        got = self._signatures("native", h, counts, a, b, monkeypatch)
-        assert np.array_equal(ref, got)
+        ref = K._minhash_batch_u64(h, counts, a, b)
         starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
         direct = KN.minhash_fused(h, starts, counts.astype(np.int64), a, b)
         assert np.array_equal(ref, direct)
+        assert np.array_equal(ref, _oracle_sigs(h, counts, a, b))
 
-    def test_native_rolling_bit_identical(self, monkeypatch):
-        # round-6: the incremental C rolling hash must equal the NumPy
-        # Horner-over-concat + boundary-mask path, including docs shorter
-        # than / equal to k.  Skips cleanly when no C compiler.
-        from lexis_minhash_spark import kernels_native as KN
-
-        if KN.load() is None:
-            import pytest
-
-            pytest.skip("no native kernel on this host")
+    def test_native_rolling_bit_identical(self):
+        # incremental C rolling hash == uint64 Horner-over-concat + boundary
+        # mask == oracle, including docs shorter than / equal to k
+        KN = _native()
         texts = [
             "the quick brown fox jumps over the lazy dog",
             "", "ab", "abcd", "abcde", "abcdef", "x" * 5,
             "pack my box with five dozen liquor jugs",
         ]
+        chunks = [t.encode("utf-8") for t in texts]
+        data = np.frombuffer(b"".join(chunks), dtype=np.uint8)
+        lens = np.array([len(c) for c in chunks], dtype=np.int64)
         for k in (2, 5, 9):
-            monkeypatch.setenv("LEXIS_ROLLING_BACKEND", "u64")
-            h1, c1 = K.batch_shingle_hashes(texts, k)
-            monkeypatch.setenv("LEXIS_ROLLING_BACKEND", "native")
-            h2, c2 = K.batch_shingle_hashes(texts, k)
+            h1, c1 = K._shingle_hashes_concat_u64(data, lens, k)
+            h2, c2 = KN.rolling_hashes_multi(data, np.cumsum(lens) - lens, lens, k)
             assert np.array_equal(h1, h2) and np.array_equal(c1, c2), k
+            ref = [x for t in texts for x in O.oracle_shingle_hashes(t, k)]
+            assert h1.tolist() == ref, k
 
     @given(
         st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=1, max_size=200),
@@ -418,24 +440,119 @@ class TestMulshiftBackends:
     )
     @settings(max_examples=30, deadline=None)
     def test_backends_bit_identical_property(self, hashes, s):
-        import os as _os
         h = np.array(hashes, dtype=np.uint64)
         counts = np.array([len(hashes)])
         a, b = seeded_coefficients(99, s)
-        old = _os.environ.get("LEXIS_MULSHIFT_BACKEND")
-        try:
-            _os.environ["LEXIS_MULSHIFT_BACKEND"] = "u64"
-            s1 = K.minhash_batch(h, counts, a, b)
-            _os.environ["LEXIS_MULSHIFT_BACKEND"] = "gemm"
-            s2 = K.minhash_batch(h, counts, a, b)
-        finally:
-            if old is None:
-                _os.environ.pop("LEXIS_MULSHIFT_BACKEND", None)
-            else:
-                _os.environ["LEXIS_MULSHIFT_BACKEND"] = old
-        assert np.array_equal(s1, s2)
+        ref = _oracle_sigs(h, counts, a, b)
+        assert np.array_equal(K._minhash_batch_u64(h, counts, a, b), ref)
+        assert np.array_equal(K.minhash_batch(h, counts, a, b), ref)
 
-    def test_calibration_picks_a_backend(self):
-        import lexis_minhash_spark.kernels as KK
-        choice = KK._pick_mulshift_backend(100)
-        assert choice in ("u64", "gemm", "native")
+    def test_weighted_matches_oracle(self):
+        # the weighted update has one implementation (uint64 NumPy); check
+        # it on a multi-doc batch with dropped, fractional and >= 1 weights
+        # across several BLOCK_ELEMS blocks
+        rng = np.random.default_rng(5)
+        counts = rng.integers(0, 60, 40)
+        counts[3] = 0
+        n = int(counts.sum())
+        h = rng.integers(0, 2**64, n, dtype=np.uint64)
+        w = rng.choice([-1.0, 0.0, 1e-9, 0.3, 0.99, 1.0, 2.5, 1e6], size=n)
+        a, b = seeded_coefficients(12345, 100)
+        got = K.minhash_batch(h, counts, a, b, weights_concat=w)
+        assert np.array_equal(got, _oracle_sigs(h, counts, a, b, w))
+
+    def test_simhash_mix_matches_oracle(self):
+        rng = np.random.default_rng(9)
+        n = K.BLOCK_ELEMS // 2 + 17  # spans two blocks
+        h = rng.integers(0, 2**64, n, dtype=np.uint64)
+        a, b = seeded_coefficients(K.SIMHASH_MIX_SEED, 2)
+        got = K._simhash_mix(h)
+        idx = rng.choice(n, 200, replace=False).tolist() + [0, n - 1]
+        for i in idx:
+            assert int(got[i]) == O.oracle_simhash_mix(int(h[i]), a.tolist(), b.tolist())
+
+    def test_audio_rolling_windows(self):
+        # audio envelopes: arbitrary bytes, zero-length clips and clips
+        # shorter than the window; every family must keep exactly the
+        # windows inside one clip
+        rng = np.random.default_rng(13)
+        k = 24
+        lens = np.array([0, 100, 5, 0, 23, 24, 25, 400, 0], dtype=np.int64)
+        clips = [rng.integers(0, 256, int(m), dtype=np.uint8) for m in lens]
+        data = np.concatenate(clips)
+        ref = [x for c in clips for x in O.oracle_rolling_hashes(c.tobytes(), k)]
+        h, counts = K._shingle_hashes_concat_u64(data, lens, k)
+        assert h.tolist() == ref
+        assert counts.tolist() == [max(int(m) - k + 1, 0) for m in lens]
+        h, counts2 = K.shingle_hashes_concat(data, lens, k)
+        assert h.tolist() == ref and np.array_equal(counts, counts2)
+        KN = _native()
+        h, counts2 = KN.rolling_hashes_multi(data, np.cumsum(lens) - lens, lens, k)
+        assert h.tolist() == ref and np.array_equal(counts, counts2)
+
+    def test_backend_choice_is_deterministic(self):
+        from lexis_minhash_spark import kernels_native as KN
+
+        expected = "native" if KN.load() is not None else "u64"
+        for s in (1, 2, 64, 100, 256):
+            assert K._pick_mulshift_backend(s) == expected
+            assert K._MULSHIFT_BACKEND == expected
+        for k in (2, 5, 24):
+            assert K._pick_rolling_backend(k) == expected
+            assert K._ROLLING_BACKEND == expected
+
+
+class TestNativeCache:
+    """The shared library is only dlopened from a cache directory owned by
+    the current user and not group- or world-writable; anything else falls
+    back to the NumPy kernels with one warning."""
+
+    @pytest.fixture
+    def native(self, monkeypatch):
+        """kernels_native with load() not yet tried, and the list every
+        dlopen path is recorded in."""
+        from lexis_minhash_spark import kernels_native as KN
+
+        monkeypatch.delenv("LEXIS_NATIVE_KERNEL", raising=False)
+        monkeypatch.setattr(KN, "_LIB", None)
+        monkeypatch.setattr(KN, "_LOAD_TRIED", False)
+        opened = []
+        real_cdll = KN.ctypes.CDLL
+
+        def cdll(path, *args, **kw):
+            opened.append(path)
+            return real_cdll(path, *args, **kw)
+
+        monkeypatch.setattr(KN.ctypes, "CDLL", cdll)
+        return KN, opened
+
+    def test_world_writable_dir_refused(self, native, monkeypatch, tmp_path):
+        KN, opened = native
+        d = tmp_path / "cache"
+        d.mkdir()
+        d.chmod(0o777)
+        monkeypatch.setattr(KN, "_CACHE_DIR", str(d))
+        with pytest.warns(RuntimeWarning, match="writable"):
+            assert KN.load() is None
+        assert opened == []
+        assert list(d.iterdir()) == []  # nothing built there either
+
+    def test_world_writable_library_refused(self, native, monkeypatch, tmp_path):
+        KN, opened = native
+        d = tmp_path / "cache"
+        d.mkdir(mode=0o700)
+        monkeypatch.setattr(KN, "_CACHE_DIR", str(d))
+        so = KN._library_path()
+        with open(so, "wb") as f:
+            f.write(b"not a library")
+        os.chmod(so, 0o666)
+        with pytest.warns(RuntimeWarning, match="writable"):
+            assert KN.load() is None
+        assert opened == []
+
+    def test_fresh_dir_created_private(self, native, monkeypatch, tmp_path):
+        KN, _ = native
+        d = tmp_path / "sub" / "cache"
+        monkeypatch.setattr(KN, "_CACHE_DIR", str(d))
+        KN.load()
+        assert stat.S_IMODE(d.stat().st_mode) == 0o700

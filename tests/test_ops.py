@@ -162,6 +162,18 @@ class TestPairsAndClusters:
             bands, max_bucket_size=50).collect()}
         assert packed_capped == exact_capped
 
+    def test_grouped_candidates_drop_self_pairs(self, spark):
+        # two of doc 1's band keys collide after packing, so doc 1 sits in
+        # bucket 5 twice; it must not pair with itself
+        packed = spark.createDataFrame(
+            [(1, 5), (1, 5), (2, 5), (3, 7)], "doc_id long, band_key long"
+        )
+        for cap in (None, 10):
+            got = ops.candidate_pairs_grouped(
+                packed, max_bucket_size=cap, key_cols=("band_key",)
+            ).collect()
+            assert sorted((r.a, r.b) for r in got) == [(1, 2)]
+
 
 class TestQueries:
     def test_query_candidates_match_oracle(self, spark, sig_df):
