@@ -1,10 +1,25 @@
-"""LSHIndexDF — the reference's LSHIndex API surface (index.cr:95-239)
-re-expressed over DataFrames.
+"""LSHIndexDF — the reference's LSHIndex API surface (index.cr:95-239).
 
-The 'index' is two DataFrames (signatures + exploded bands); the reference's
-per-band open-addressing hash tables (index.cr:19-89) are subsumed by
-Spark's hash shuffle partitioning.  All methods are lazy DataFrame builders
-except the ``query*`` convenience collectors.
+The index holds its rows twice:
+
+- the ``signatures`` DataFrame and its exploded ``bands()`` table, which
+  the set operations run on as joins (``find_similar_pairs``,
+  ``load_factors``);
+- a driver-side serving structure that answers the point operations
+  (``query``, ``query_with_scores``, ``query_by_signature``,
+  ``query_with_weights``, ``get_signature``, ``size``) without a Spark
+  job: the doc ids, the uint32 signature matrix and, per band, the band
+  hashes of the non-zero signatures sorted with their row order.  These
+  sorted columns stand in for the reference's per-band bucket tables
+  (index.cr:19-89); a probe is one ``searchsorted`` per band, and scoring
+  is slot equality against the candidates' signature rows.
+
+Each add collects the new rows' ``doc_id, sig, bands, is_zero`` in one
+Arrow ``toPandas``; the sorted columns are rebuilt on the first read after
+a change.  The index is therefore bounded by driver memory, as the
+reference's is: about 0.9 KB per document at 100 slots and 20 bands.  A
+collect too large for the driver fails through
+``spark.driver.maxResultSize``.
 """
 
 from __future__ import annotations
@@ -19,7 +34,7 @@ from lexis_minhash_spark import ops
 
 
 class LSHIndexDF:
-    """DataFrame-backed LSH index.
+    """LSH index over a Spark signatures table, served from the driver.
 
     >>> idx = LSHIndexDF(spark, cfg)
     >>> idx.add_documents(docs_df)          # L5 add (index.cr:114-122)
@@ -39,7 +54,7 @@ class LSHIndexDF:
         # reference quirk parity: LSHIndex(bands:) overrides band count while
         # rows_per_band still comes from the engine config (engine.cr:427,444)
         self.num_bands = num_bands if num_bands is not None else cfg.num_bands
-        self._signatures: DataFrame | None = None
+        self.clear()
 
     # -- build side --------------------------------------------------------
 
@@ -49,33 +64,66 @@ class LSHIndexDF:
     ) -> None:
         """Append documents (recompute-from-text path, L5/L8)."""
         sig = ops.with_signatures(docs, self.cfg, text_col, id_col, weights_hashed)
-        if self.num_bands != self.cfg.num_bands:
-            sig = self._rebands(sig)
-        self._signatures = sig if self._signatures is None else self._signatures.unionByName(sig)
+        self._add(sig.withColumnRenamed(id_col, "doc_id"))
 
     def add_signatures(self, sig_df: DataFrame) -> None:
         """Append a precomputed signatures table (add_with_signature path)."""
-        self._signatures = (
-            sig_df if self._signatures is None else self._signatures.unionByName(sig_df)
-        )
+        self._add(sig_df)
+
+    def _add(self, sig_df: DataFrame) -> None:
+        if self.num_bands != self.cfg.num_bands:
+            sig_df = self._rebands(sig_df)
+        pdf = sig_df.select("doc_id", "sig", "bands", "is_zero").toPandas()
+        n = len(pdf)
+        sigs = np.frombuffer(b"".join(pdf["sig"]), dtype="<u4").reshape(n, self.cfg.signature_size)
+        bands = np.array(pdf["bands"].tolist(), dtype=np.int64).reshape(n, self.num_bands)
+        self._ids = np.concatenate([self._ids, pdf["doc_id"].to_numpy()])
+        self._sigs = np.concatenate([self._sigs, sigs])
+        self._bands = np.concatenate([self._bands, bands])
+        self._zero = np.concatenate([self._zero, pdf["is_zero"].to_numpy(dtype=bool)])
+        self._sorted = None
+        self._signatures = sig_df if self._signatures is None else self._signatures.unionByName(sig_df)
 
     def _rebands(self, sig_df: DataFrame) -> DataFrame:
         """Recompute the bands column for a non-default band count (keeps
         rows_per_band from config — the reference quirk)."""
-        cfg, nb = self.cfg, self.num_bands
+        s, nb, r = self.cfg.signature_size, self.num_bands, self.cfg.rows_per_band
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import ArrayType, LongType
 
         @pandas_udf(ArrayType(LongType()))
         def reband(sigs: pd.Series) -> pd.Series:
-            out = []
-            for blob in sigs:
-                sig = np.frombuffer(blob, dtype="<u4").astype(np.uint32)
-                bh = K.band_hashes_batch(sig[None, :], nb, cfg.rows_per_band)[0]
-                out.append(bh.view(np.int64))
-            return pd.Series(out)
+            m = np.frombuffer(b"".join(sigs), dtype="<u4").reshape(len(sigs), s)
+            return pd.Series(list(K.band_hashes_batch(m, nb, r).view(np.int64)))
 
         return sig_df.withColumn("bands", reband(F.col("sig")))
+
+    def _serving(self) -> tuple[np.ndarray, np.ndarray]:
+        """Per-band sorted band hashes and their row numbers, each of shape
+        (num_bands, non-zero docs); rebuilt after every change.  The rows
+        are kept sorted by doc id, so row order is doc-id order."""
+        if self._signatures is None:
+            raise ValueError("index is empty — add documents first")
+        if self._sorted is None:
+            order = np.argsort(self._ids, kind="stable")
+            self._ids, self._sigs = self._ids[order], self._sigs[order]
+            self._bands, self._zero = self._bands[order], self._zero[order]
+            # zero signatures are quarantined, as in ops.bands_table
+            nz = np.flatnonzero(~self._zero)
+            by_hash = np.argsort(self._bands[nz], axis=0, kind="stable")
+            keys = np.take_along_axis(self._bands[nz], by_hash, axis=0)
+            self._sorted = (np.ascontiguousarray(keys.T), np.ascontiguousarray(nz[by_hash].T))
+        return self._sorted
+
+    def _candidate_rows(self, sig: np.ndarray) -> np.ndarray:
+        """Rows sharing at least one band with ``sig``, in doc-id order."""
+        keys, rows = self._serving()
+        qb = K.band_hashes_batch(sig[None, :], self.num_bands, self.cfg.rows_per_band)[0]
+        hits = [
+            r[np.searchsorted(k, q, "left"):np.searchsorted(k, q, "right")]
+            for k, r, q in zip(keys, rows, qb.view(np.int64))
+        ]
+        return np.unique(np.concatenate(hits))
 
     # -- read side ---------------------------------------------------------
 
@@ -90,15 +138,24 @@ class LSHIndexDF:
 
     def size(self) -> int:
         """L11 (index.cr:225-227)."""
-        return self.signatures.count()
+        self._serving()
+        return len(self._ids)
 
     def clear(self) -> None:
         self._signatures = None
+        self._ids = np.empty(0, dtype=np.int64)
+        self._sigs = np.empty((0, self.cfg.signature_size), dtype=np.uint32)
+        self._bands = np.empty((0, self.num_bands), dtype=np.int64)
+        self._zero = np.empty(0, dtype=bool)
+        self._sorted = None
 
     def get_signature(self, doc_id) -> np.ndarray | None:
         """L10 point lookup (index.cr:220-222)."""
-        row = self.signatures.where(F.col("doc_id") == doc_id).select("sig").head()
-        return None if row is None else np.frombuffer(row.sig, dtype="<u4").astype(np.uint32)
+        self._serving()
+        i = np.searchsorted(self._ids, doc_id)
+        if i == len(self._ids) or self._ids[i] != doc_id:
+            return None
+        return self._sigs[i].copy()
 
     def load_factors(self) -> DataFrame:
         """L4 metrics (index.cr:231-233) as a metrics query."""
@@ -108,16 +165,17 @@ class LSHIndexDF:
 
     def query(self, text: str) -> set:
         """L6: candidate doc ids for one query text."""
-        df = ops.query_candidates(self.spark, [(0, text)], self.bands(), self.cfg)
-        return {r.doc_id for r in df.collect()}
+        return self.query_by_signature(ops.query_signature(text, self.cfg))
 
     def query_with_scores(self, text: str, max_candidates: int | None = None) -> list[tuple]:
-        """L7: (doc_id, score) sorted desc."""
-        df = ops.query_with_scores(
-            self.spark, [(0, text)], self.bands(), self.signatures, self.cfg,
-            max_candidates=max_candidates,
-        )
-        return [(r.doc_id, r.score) for r in df.collect()]
+        """L7: (doc_id, score) by score desc, then doc_id — the order of
+        ``ops.query_with_scores``."""
+        sig = ops.query_signature(text, self.cfg)
+        rows = self._candidate_rows(sig)
+        scores = (self._sigs[rows] == sig).mean(axis=1)
+        # rows are in doc-id order, so a stable sort on score breaks ties by id
+        top = np.argsort(-scores, kind="stable")[:max_candidates]
+        return list(zip(self._ids[rows[top]].tolist(), scores[top].tolist()))
 
     def query_with_weights(self, text: str, weights: dict[str, float]) -> set:
         """L8: weighted query — weighted signature, then L6."""
@@ -140,18 +198,8 @@ class LSHIndexDF:
         return self.query_by_signature(sig)
 
     def query_by_signature(self, sig: np.ndarray) -> set:
-        bh = K.band_hashes_batch(
-            np.asarray(sig, dtype=np.uint32)[None, :], self.num_bands, self.cfg.rows_per_band
-        )[0].view(np.int64)
-        rows = [(0, i, int(bh[i])) for i in range(self.num_bands)]
-        qdf = self.spark.createDataFrame(rows, "query_id long, band_idx int, band_hash long")
-        df = (
-            self.bands()
-            .join(F.broadcast(qdf), ["band_idx", "band_hash"])
-            .select("doc_id")
-            .distinct()
-        )
-        return {r.doc_id for r in df.collect()}
+        rows = self._candidate_rows(np.asarray(sig, dtype=np.uint32))
+        return set(self._ids[rows].tolist())
 
     def find_similar_pairs(
         self, threshold: float = 0.75, max_bucket_size: int | None = None

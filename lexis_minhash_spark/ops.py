@@ -7,7 +7,8 @@ The reference's LSHIndex (index.cr) becomes plain DataFrames:
 ``sig`` is the canonical little-endian blob (interchangeable with the
 reference, serialize.cr); ``sig_arr`` is the signed-int32 reinterpret used
 by the pure-SQL verify join (equality-safe, keeps verification JVM-side).
-The index's operations become joins/aggregations (SURVEY.md §2.3).
+The index's set operations become joins/aggregations (SURVEY.md §2.3);
+LSHIndexDF serves point queries from driver-side arrays (index.py).
 
 Scale notes (100 TB design point):
 - signature computation is one Arrow round-trip per batch; all hashing is
@@ -377,7 +378,6 @@ def verified_pairs(
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 25,
     driver_threshold: int | None = 5_000_000,
 ) -> DataFrame:
     """Connected components over the verified-pair edge list → clusters
@@ -398,9 +398,6 @@ def connected_components(
       SoCC'14; operators/cc.py) — O(log^2 n) rounds worst case,
       localCheckpoint per round.
 
-    ``max_iter`` only applies to the legacy min-label propagation kept in
-    ``_cc_propagation`` for cross-checks.
-
     Input: edges(a, b). Output: (doc_id, cluster_id) for every node that
     appears in an edge (singletons are their own cluster by definition and
     are added by the caller via a left join)."""
@@ -411,40 +408,6 @@ def connected_components(
     from lexis_minhash_spark.operators.cc import large_star_small_star
 
     return large_star_small_star(edges.select("a", "b"))
-
-
-def _cc_propagation(
-    edges: DataFrame,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Legacy distributed strategy: min-label propagation (O(diameter)
-    rounds). Kept for cross-checking the LS/SS implementation."""
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    comp = nodes.withColumn("comp", F.col("node")).localCheckpoint()
-    sym = edges.select("a", "b").union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.localCheckpoint()
-    for _ in range(max_iter):
-        msgs = (
-            sym.join(comp, sym.a == comp.node)
-            .select(F.col("b").alias("node"), F.col("comp"))
-            .union(comp.select("node", "comp"))
-        )
-        new_comp = msgs.groupBy("node").agg(F.min("comp").alias("comp")).localCheckpoint()
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
-            break
-    return comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
 def _cc_numpy(a_idx: np.ndarray, b_idx: np.ndarray, n: int) -> np.ndarray:
@@ -520,6 +483,15 @@ def clusters_with_singletons(
     )
 
 
+def query_signature(text: str, cfg: EngineConfig) -> np.ndarray:
+    """Driver-side signature of one query text (zero when gated out)."""
+    norm = K.normalize_text(text)
+    if not K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
+        return K.zero_signature(cfg.signature_size)
+    a, b = cfg.coefficients
+    return K.minhash_from_hashes(K.shingle_hashes_text(norm, cfg.shingle_size), a, b)
+
+
 def query_candidates(
     spark: SparkSession,
     query_texts: list[tuple[int, str]],
@@ -530,14 +502,8 @@ def query_candidates(
     """L6 query (index.cr:146-163): broadcast the ≤num_bands query band rows,
     equi-join the bands table, distinct. Returns (query_id, doc_id)."""
     rows = []
-    a, b = cfg.coefficients
     for qid, text in query_texts:
-        norm = K.normalize_text(text)
-        if K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
-            h = K.shingle_hashes_text(norm, cfg.shingle_size)
-            sig = K.minhash_from_hashes(h, a, b)
-        else:
-            sig = K.zero_signature(cfg.signature_size)
+        sig = query_signature(text, cfg)
         bh = K.band_hashes_batch(sig[None, :], cfg.num_bands, cfg.rows_per_band)[0].view(np.int64)
         for band_idx in range(cfg.num_bands):
             rows.append((qid, band_idx, int(bh[band_idx])))
@@ -562,16 +528,7 @@ def query_with_scores(
     S1 score → sort desc (+ optional spec'd max_candidates limit,
     openspec/specs/lsh-index/spec.md:20)."""
     cands = query_candidates(spark, query_texts, bands_df, cfg, id_col)
-    a, b = cfg.coefficients
-    qsigs = []
-    for qid, text in query_texts:
-        norm = K.normalize_text(text)
-        if K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
-            h = K.shingle_hashes_text(norm, cfg.shingle_size)
-            sig = K.minhash_from_hashes(h, a, b)
-        else:
-            sig = K.zero_signature(cfg.signature_size)
-        qsigs.append((qid, K.signature_to_bytes(sig)))
+    qsigs = [(qid, K.signature_to_bytes(query_signature(text, cfg))) for qid, text in query_texts]
     qsig_df = spark.createDataFrame(qsigs, "query_id long, qsig binary")
     sim = similarity_udf_binary()
     scored = (

@@ -2,6 +2,8 @@
 (ports of /root/reference/spec/lexis_minhash_spec.cr:168-259 and
 more_spec.cr:51-90)."""
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -90,7 +92,7 @@ class TestPairsAndClusters:
     @pytest.mark.parametrize("driver_threshold", [5_000_000, None])
     def test_clusters(self, spark, sig_df, driver_threshold):
         # both physical strategies: driver union-find and distributed
-        # min-label propagation must agree with the oracle
+        # large-star/small-star must agree with the oracle
         bands = ops.bands_table(sig_df)
         ver = ops.verified_pairs(ops.candidate_pairs(bands), sig_df, 0.75)
         cc = ops.connected_components(
@@ -222,6 +224,64 @@ class TestQueries:
         assert len(scored) == 1
 
 
+# added after DOCS: doc 0 ties docs 4 and 5 (same text) but is inserted
+# last; doc 11 is gated out (zero signature)
+EXTRA = [
+    (0, "apple banana orange fruit salad recipe with apple and banana"),
+    (10, "Weather forecast predicts heavy rain tomorrow afternoon in the city"),
+    (11, "tiny"),
+]
+PROBES = [
+    "Technology company announces revolutionary new smartphone gadget",
+    "apple banana orange fruit salad recipe with apple and banana",
+    "Weather forecast predicts rain tomorrow afternoon in the town",
+    "Short",  # gated out: zero query signature
+    "nothing in this index resembles the words of this probe",
+]
+
+
+def _oracle_sig_df(spark, docs, num_bands=20):
+    """A signatures table computed by oracle.py, not by the kernels."""
+    rows = []
+    for d, t in docs:
+        sig = O.oracle_signature(t, AO, BO, 5, 4)
+        bands = [h if h < 2**63 else h - 2**64 for _, h in O.oracle_bands(sig, num_bands, 5)]
+        sig_arr = [v if v < 2**31 else v - 2**32 for v in sig]
+        n = len(O.oracle_shingle_hashes(t.lower().strip(), 5)) if any(sig) else 0
+        rows.append((d, np.array(sig, dtype="<u4").tobytes(), sig_arr, bands, not any(sig), n))
+    return spark.createDataFrame(
+        rows,
+        "doc_id long, sig binary, sig_arr array<int>, bands array<long>,"
+        " is_zero boolean, n_shingles int",
+    )
+
+
+def _dataframe_answers(spark, idx, max_candidates):
+    """Per probe, the ops.query_* builders' answers over the index's
+    DataFrames: (candidate set, ordered (doc_id, score) list)."""
+    qs = list(enumerate(PROBES))
+    cands = ops.query_candidates(spark, qs, idx.bands(), CFG).collect()
+    scored = ops.query_with_scores(
+        spark, qs, idx.bands(), idx.signatures, CFG, max_candidates=max_candidates
+    ).collect()
+    # the builder orders all probes' rows together by (score desc, doc_id);
+    # filtering one probe's rows keeps that order
+    return [
+        (
+            {r.doc_id for r in cands if r.query_id == q},
+            [(r.doc_id, r.score) for r in scored if r.query_id == q],
+        )
+        for q, _ in qs
+    ]
+
+
+def _assert_serves_like_dataframes(spark, idx):
+    for mc in (None, 2):
+        for text, (exp_c, exp_s) in zip(PROBES, _dataframe_answers(spark, idx, mc)):
+            assert idx.query(text) == exp_c, text
+            assert idx.query_with_scores(text, max_candidates=mc) == exp_s, (text, mc)
+
+
 class TestIndexAPI:
     def test_add_query_find_pairs(self, spark, docs_df):
         idx = LSHIndexDF(spark, CFG)
@@ -243,8 +303,9 @@ class TestIndexAPI:
         lf = idx.load_factors().collect()
         assert len(lf) == 20
         idx.clear()
-        with pytest.raises(ValueError):
-            idx.size()
+        for op in (idx.size, lambda: idx.query(PROBES[0]), lambda: idx.query_with_scores(PROBES[0])):
+            with pytest.raises(ValueError):
+                op()
 
     def test_band_override_quirk(self, spark, docs_df):
         # LSHIndex(bands: 10) uses only first 50 signature slots
@@ -260,6 +321,64 @@ class TestIndexAPI:
             for r in bands.where(F.col("doc_id") == 1).orderBy("band_idx").collect()
         ]
         assert got == exp
+        # the add_signatures path rebands too, so both paths hold the same
+        # bands and answer alike
+        by_sig = LSHIndexDF(spark, CFG, num_bands=10)
+        by_sig.add_signatures(ops.with_signatures(docs_df, CFG))
+        assert sorted(by_sig.bands().collect()) == sorted(bands.collect())
+        for text in PROBES:
+            assert by_sig.query_with_scores(text) == idx.query_with_scores(text), text
+        # the builders fold all 20 query bands; bands 10-19 match nothing
+        _assert_serves_like_dataframes(spark, by_sig)
+
+    def test_point_queries_match_dataframe_builders(self, spark):
+        idx = LSHIndexDF(spark, CFG)
+        idx.add_signatures(_oracle_sig_df(spark, DOCS))
+        idx.add_signatures(_oracle_sig_df(spark, EXTRA))
+        _assert_serves_like_dataframes(spark, idx)
+        # the score tie is broken by doc_id, not by insertion order
+        assert idx.query_with_scores(PROBES[1], max_candidates=2) == [(0, 1.0), (4, 1.0)]
+        # zero signatures are indexed but never candidates
+        assert idx.size() == len(DOCS) + len(EXTRA)
+        assert not idx.get_signature(11).any()
+        assert idx.query("Short") == set()
+        for text in PROBES:
+            assert not {7, 8, 11} & idx.query(text)
+
+    def test_add_documents_after_add_signatures(self, spark):
+        idx = LSHIndexDF(spark, CFG)
+        idx.add_signatures(_oracle_sig_df(spark, DOCS))
+        idx.add_documents(spark.createDataFrame(EXTRA, "doc_id long, text string"))
+        _assert_serves_like_dataframes(spark, idx)
+        oracle_only = LSHIndexDF(spark, CFG)
+        oracle_only.add_signatures(_oracle_sig_df(spark, DOCS + EXTRA))
+        for text in PROBES:
+            assert idx.query_with_scores(text) == oracle_only.query_with_scores(text), text
+        assert idx.get_signature(10).tolist() == O.oracle_signature(EXTRA[1][1], AO, BO, 5, 4)
+
+    def test_point_operations_run_no_spark_job(self, spark, docs_df):
+        idx = LSHIndexDF(spark, CFG)
+        idx.add_documents(docs_df)
+        sc = spark.sparkContext
+        group = "lexis-index-point-ops"
+        sc.setJobGroup(group, "index point operations")
+        try:
+            idx.query_with_scores(PROBES[0])
+            idx.query_with_scores(PROBES[1], max_candidates=1)
+            idx.query(PROBES[2])
+            idx.query_with_weights(PROBES[1], {"apple": 2.0})
+            idx.get_signature(1)
+            idx.size()
+            # one job of our own: once it shows up in the tracker, any job
+            # issued before it in this group would show up too
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert len(tracker.getJobIdsForGroup(group)) == 1
 
     def test_weighted_query(self, spark, docs_df):
         idx = LSHIndexDF(spark, CFG)
